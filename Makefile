@@ -1,6 +1,6 @@
 PY ?= python
 
-.PHONY: test test-fast parity parity-sf01 bench bench-bucketed bench-compare smoke driver-check baseline scale-study ratio plans pil-check country-scale
+.PHONY: test test-fast parity parity-sf01 bench bench-bucketed bench-compare smoke driver-check baseline scale-study ratio plans pil-check country-scale perfbench-test worker-profile
 
 driver-check:
 	$(PY) tools/driver_emulation.py
@@ -15,7 +15,10 @@ test:
 	$(PY) -m pytest tests/ -q
 
 test-fast:
-	$(PY) -m pytest tests/test_speeds.py tests/test_geometry.py tests/test_graph_kernels.py tests/test_properties.py -q
+	$(PY) -m pytest tests/test_speeds.py tests/test_geometry.py tests/test_graph_kernels.py tests/test_properties.py tests/test_worker_runtime.py tests/test_session.py -q
+
+perfbench-test:
+	$(PY) -m pytest perfbench/tests -q
 
 parity:
 	$(PY) -m pytest tests/test_oracle_parity.py -q
@@ -54,6 +57,12 @@ plans:
 pil-check:
 	$(PY) -m pip install --quiet pillow
 	$(PY) -m pytest tests/test_llm_operators.py -q -k "pil or stdlib or multimodal" tests/test_imagecodec.py -q
+
+# cProfile a warm Python worker task (one-row pandas UDF actions); rerun
+# after a pyspark or Python upgrade. GUARD=off profiles without the zip
+# directory re-read guard (duckdb_routing_spark/worker_runtime.py).
+worker-profile:
+	$(PY) tools/worker_profile.py --guard $(or $(GUARD),on)
 
 country-scale:
 	$(PY) tools/country_scale.py --dim 1200 --pairs 50

@@ -12,11 +12,17 @@ Layout:
     streaming/    -- Structured Streaming surface over the events table
     plans/        -- plan-inspection helpers (explain auditing)
     testing.py    -- deterministic synthetic road-grid fixtures
+    worker_runtime.py -- per-process Python worker fixes (zip re-read guard)
 """
 
 __version__ = "0.1.0"
 
 from duckdb_routing_spark.session import get_spark  # noqa: F401
+from duckdb_routing_spark.worker_runtime import install_zip_cache_guard
+
+# Python workers import this package when they unpickle one of its
+# functions, so this installs the guard in every worker that runs them
+install_zip_cache_guard()
 
 
 def connect(tiles: str | None = None, spark=None, sf_dir: str | None = None, **session_kwargs):

@@ -13,6 +13,22 @@ import os
 from pyspark.sql import SparkSession
 
 
+def default_driver_memory(meminfo: str = "/proc/meminfo") -> str:
+    """Driver heap when SPARK_GRAFT_DRIVER_MEM is unset: half of physical
+    memory, capped at 48g. A fixed 48g on a 15 GiB host let the local-mode
+    JVM (driver and executors in one process) grow until the kernel killed
+    it. Falls back to the cap where /proc/meminfo is absent."""
+    try:
+        with open(meminfo) as f:
+            for line in f:
+                if line.startswith("MemTotal:"):
+                    total_mb = int(line.split()[1]) // 1024
+                    return f"{max(1024, min(total_mb // 2, 48 * 1024))}m"
+    except (OSError, ValueError, IndexError):
+        pass
+    return "48g"
+
+
 def get_spark(
     app_name: str = "duckdb_routing_spark",
     master: str | None = None,
@@ -42,7 +58,7 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "65536")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM") or default_driver_memory())
         .config("spark.ui.enabled", "false")
         # the events table stores timestamp[ns]; Spark has no nanos timestamp,
         # so read as long and convert explicitly (see queries.registry.table)
